@@ -72,8 +72,10 @@ BENCH_QUERIES = [
 # scale path and the benched member); q111/q112 parse fixed 10/7-row
 # synthetic WAV/MP4 pools (fixture-bound, microseconds of real work —
 # a timing would measure session overhead, not the operator); q113 is
-# q110's plan (the benched cut-location pipeline) plus one map-shaped
-# higher-order-filter rewrite stage — no new shuffle to regress.
+# q110's plan (the benched cut-location pipeline) plus one more Exchange,
+# for the collect_list of cut intervals per affected doc (small next to
+# q110's window-hash shuffle), and a map-shaped higher-order-filter
+# rewrite stage — its shuffle cost is q110's, which is benched.
 # q94 runs at its registered threshold (0.9) and is the bench's most
 # expensive line BY MEASURED NATURE, not by accident: the sf0.1
 # synthetic corpus truly contains 964,854 near-dup pairs at Jaccard
@@ -186,21 +188,22 @@ def main() -> None:
     matched = sum(1 for d in want if got.get(d) == want[d])
     span_match_rate = matched / max(len(want), 1)
 
-    # scaling-gate evidence from the most recent scripts/bench_scaling.py
+    # scaling-gate verdict from the most recent scripts/bench_scaling.py
     # run (BENCH/scaling.json) — the north rule's N -> 4N number travels
-    # with the per-round bench artifact.
+    # with the per-round bench artifact. Only the summary: the per-round
+    # evidence (gate.rounds, ~5 KB) stays in BENCH/scaling.json so this
+    # line stays short enough to parse.
     scaling = None
     scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "scaling.json")
     if os.path.exists(scaling_path):
         with open(scaling_path) as f:
             s = json.load(f)
-        # generated_at travels with the embedded evidence so a stale
-        # scaling run is visible as such in the round artifact
-        scaling = {
-            "gate": s.get("gate"),
-            "pairs": s.get("pairs"),
-            "generated_at": s.get("generated_at"),
-        }
+        gate = s.get("gate") or {}
+        # generated_at travels with the verdict so a stale scaling run is
+        # visible as such in the round artifact
+        scaling = {k: gate.get(k) for k in ("pair", "efficiency", "target", "pass", "ceiling_efficiency",
+                                            "round_ratios")}
+        scaling.update(generated_at=s.get("generated_at"), host_cores=s.get("host_cores"))
 
     total = round(sum(timings.values()), 3)
     print(

@@ -21,4 +21,11 @@ Design (see SURVEY.md):
   relying on implicit row order (the core correctness invariant).
 """
 
+from ocr_text_recognition_spark.zipimport_compat import install_lazy_zip_invalidation
+
 __version__ = "0.1.0"
+
+# Every Python worker that unpickles an engine UDF imports this package, so
+# from then on PySpark's per-task importlib.invalidate_caches() no longer
+# re-reads pyspark.zip and the Spark jars (see zipimport_compat).
+install_lazy_zip_invalidation()

@@ -6,6 +6,21 @@ JVM/Python boundary in Arrow record batches and the expensive engine state
 (the glyph atlas / template caches — stand-ins for the reference's EasyOCR
 weights loaded once per process, /root/reference/src/model/ocr_model.py:26-31)
 is initialized lazily once per executor and reused across batches.
+
+Boundary cost. Most of the in-Spark vs standalone gap per ref was a fixed
+per-task cost, not Arrow. PySpark's worker calls
+``importlib.invalidate_caches()`` at the start of every task
+(``pyspark/worker_util.py``, ``setup_spark_files``). On CPython < 3.12 that
+makes each of a worker's 16 zipimporters (12 over pyspark.zip, 2 over
+py4j, 2 over the spark-core jar) re-read its archive's central directory:
+205-298 ms per task, measured inside a worker on a 4-core host (CPython
+3.11.7, Spark 4.1.2). This is CPython gh-103200; 3.12 made the re-read
+lazy. Unpickling any UDF here imports the package, whose ``__init__``
+installs that lazy behaviour (``zipimport_compat``), so a worker pays the
+cost on its first task only. Traced perfbench runs on that host (seeds 7
+and 8) moved ``udfs.boundary_ms_per_ref`` from 3.50 and 3.81 ms to 1.33 and
+1.06 ms on shared_refs_skewed, and from 3.99 and 3.57 ms to 1.44 and 1.15 ms
+on ocr_mixed.
 """
 
 from __future__ import annotations

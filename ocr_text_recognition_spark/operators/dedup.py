@@ -793,9 +793,12 @@ def substring_dedup_apply(
             lambda c: (i + 1 >= c["cut_start"]) & (i + 1 <= c["cut_end"]),
         ),
     )
+    # NULL text gives clean_text '' and NULL counts, as the oracle does;
+    # the explicit when() because size(NULL) is -1 with ANSI mode off.
+    n_tokens = F.when(F.col("toks").isNotNull(), F.size("toks"))
     return joined.select(
         "doc_id",
-        F.array_join(kept, " ").alias("clean_text"),
-        F.size("toks").cast("int").alias("n_tokens"),
-        (F.size("toks") - F.size(kept)).cast("int").alias("n_removed"),
+        F.coalesce(F.array_join(kept, " "), F.lit("")).alias("clean_text"),
+        n_tokens.cast("int").alias("n_tokens"),
+        (n_tokens - F.size(kept)).cast("int").alias("n_removed"),
     )

@@ -1523,7 +1523,8 @@ def test_substring_dedup_apply_rewrites_corpus(spark):
     dropped from EVERY document carrying it (the released
     deduplicate-text-datasets semantics), survivors re-join with single
     spaces on the normalized form, short/untouched docs pass through
-    with n_removed = 0, and n_tokens counts the normalized tokens."""
+    with n_removed = 0, n_tokens counts the normalized tokens, and NULL
+    text gives "" with NULL counts."""
     from ocr_text_recognition_spark.operators.dedup import substring_dedup_apply
 
     lifted = "alpha beta gamma delta epsilon"  # shared 5-token run
@@ -1533,6 +1534,7 @@ def test_substring_dedup_apply_rewrites_corpus(spark):
             (2, f"{lifted} other Words"),    # cut [1,5] -> "other words"
             (3, "short doc"),                # < window tokens: untouched
             (4, lifted),                     # fully cut -> ""
+            (5, None),                       # NULL text: "" and NULL counts
         ],
         "doc_id long, text string",
     )
@@ -1547,7 +1549,16 @@ def test_substring_dedup_apply_rewrites_corpus(spark):
         2: ("other words", 7, 5),
         3: ("short doc", 2, 0),
         4: ("", 5, 5),
+        5: ("", None, None),
     }
+    # The NULL-text row is exactly what the DuckDB oracle returns.
+    import duckdb
+
+    from ocr_text_recognition_spark.oracles import ORACLES
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT 5::BIGINT AS doc_id, NULL::VARCHAR AS text")
+    assert con.execute(ORACLES["q113_substring_dedup_apply"]).fetchall() == [(5, *out[5])]
 
 
 def test_bpe_train_matches_python_twin(spark):
