@@ -9,6 +9,7 @@ rounded identically, timestamps cast to epoch seconds).
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -2182,122 +2183,17 @@ def q112_video_metadata(spark, sf_dir):
     )
 
 
+_QUERY_NAME = re.compile(r"q(\d+)_")
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q01_pricing_summary": q01_pricing_summary,
-        "q02_filter_projection": q02_filter_projection,
-        "q03_argmax_per_group": q03_argmax_per_group,
-        "q04_ordered_concat": q04_ordered_concat,
-        "q05_gap_sessionize_events": q05_gap_sessionize_events,
-        "q06_scanline_merge": q06_scanline_merge,
-        "q07_header_inference": q07_header_inference,
-        "q08_numeric_truthtable": q08_numeric_truthtable,
-        "q09_metadata_extract": q09_metadata_extract,
-        "q10_grade_cast": q10_grade_cast,
-        "q11_row_padding": q11_row_padding,
-        "q12_grades_rows": q12_grades_rows,
-        "q13_broadcast_join_revenue": q13_broadcast_join_revenue,
-        "q14_topn_per_nation": q14_topn_per_nation,
-        "q15_exact_dedup": q15_exact_dedup,
-        "q16_minhash_signatures": q16_minhash_signatures,
-        "q17_lsh_pairs": q17_lsh_pairs,
-        "q18_simhash": q18_simhash,
-        "q19_ngram_jaccard": q19_ngram_jaccard,
-        "q20_brute_force_topk": q20_brute_force_topk,
-        "q21_embedding_near_dup": q21_embedding_near_dup,
-        "q22_lang_id": q22_lang_id,
-        "q23_quality_score": q23_quality_score,
-        "q24_token_counts": q24_token_counts,
-        "q25_fingerprints": q25_fingerprints,
-        "q26_windowed_events": q26_windowed_events,
-        "q27_salted_skew_agg": q27_salted_skew_agg,
-        "q28_extract_main_text": q28_extract_main_text,
-        "q29_extraction_pipeline": q29_extraction_pipeline,
-        "q30_image_metadata": q30_image_metadata,
-        "q31_tokens_to_grid": q31_tokens_to_grid,
-        "q32_interval_join": q32_interval_join,
-        "q33_grades_json": q33_grades_json,
-        "q34_sorted_distinct_coords": q34_sorted_distinct_coords,
-        "q35_lsh_topk": q35_lsh_topk,
-        "q36_cer": q36_cer,
-        "q37_ivf_topk": q37_ivf_topk,
-        "q38_pdf_reading_order": q38_pdf_reading_order,
-        "q39_keyword_columns": q39_keyword_columns,
-        "q40_lsh_topk_multiprobe": q40_lsh_topk_multiprobe,
-        "q41_dedup_pipeline": q41_dedup_pipeline,
-        "q42_keyword_grades": q42_keyword_grades,
-        "q43_resize_metadata": q43_resize_metadata,
-        "q44_stratified_sample": q44_stratified_sample,
-        "q45_clean_corpus": q45_clean_corpus,
-        "q46_metadata_diacritics": q46_metadata_diacritics,
-        "q47_incremental_lsh": q47_incremental_lsh,
-        "q48_assembled_wide_table": q48_assembled_wide_table,
-        "q49_hot_shingles": q49_hot_shingles,
-        "q50_incremental_exact": q50_incremental_exact,
-        "q51_simhash_pairs": q51_simhash_pairs,
-        "q52_dup_clusters": q52_dup_clusters,
-        "q53_decontaminate": q53_decontaminate,
-        "q54_repetition_signals": q54_repetition_signals,
-        "q55_redact_rare": q55_redact_rare,
-        "q56_pack_chunks": q56_pack_chunks,
-        "q57_domain_cap": q57_domain_cap,
-        "q58_tfidf_keywords": q58_tfidf_keywords,
-        "q59_asof_join": q59_asof_join,
-        "q60_rollup_stats": q60_rollup_stats,
-        "q61_char_percentiles": q61_char_percentiles,
-        "q62_pii_scrub": q62_pii_scrub,
-        "q63_line_dedup": q63_line_dedup,
-        "q64_range_join": q64_range_join,
-        "q65_weighted_sample": q65_weighted_sample,
-        "q66_global_rank": q66_global_rank,
-        "q67_quota_sample": q67_quota_sample,
-        "q68_hashed_linear_score": q68_hashed_linear_score,
-        "q69_funnel": q69_funnel,
-        "q70_label_centroids": q70_label_centroids,
-        "q71_cohort_retention": q71_cohort_retention,
-        "q72_scd2_intervals": q72_scd2_intervals,
-        "q73_inverted_index": q73_inverted_index,
-        "q74_key_skew_profile": q74_key_skew_profile,
-        "q75_url_dedup": q75_url_dedup,
-        "q76_interval_overlap": q76_interval_overlap,
-        "q77_bigram_lm_score": q77_bigram_lm_score,
-        "q78_pagerank": q78_pagerank,
-        "q79_collocations": q79_collocations,
-        "q80_kmeans_step": q80_kmeans_step,
-        "q81_snapshot_diff": q81_snapshot_diff,
-        "q82_triangle_counts": q82_triangle_counts,
-        "q83_trailing_window": q83_trailing_window,
-        "q84_group_ols_slope": q84_group_ols_slope,
-        "q85_customers_without_orders": q85_customers_without_orders,
-        "q86_pivot_event_matrix": q86_pivot_event_matrix,
-        "q87_unpivot_event_matrix": q87_unpivot_event_matrix,
-        "q88_priority_price_deciles": q88_priority_price_deciles,
-        "q89_json_props_rollup": q89_json_props_rollup,
-        "q90_cube_order_stats": q90_cube_order_stats,
-        "q91_kmv_distinct_users": q91_kmv_distinct_users,
-        "q92_resample_ffill": q92_resample_ffill,
-        "q93_local_supplier_volume": q93_local_supplier_volume,
-        "q94_prefix_filter_jaccard": q94_prefix_filter_jaccard,
-        "q95_vocab_encode": q95_vocab_encode,
-        "q96_grouped_split": q96_grouped_split,
-        "q97_event_transitions": q97_event_transitions,
-        "q98_price_decile_profile": q98_price_decile_profile,
-        "q99_group_correlation": q99_group_correlation,
-        "q100_copurchase_pairs": q100_copurchase_pairs,
-        "q101_hopping_window_counts": q101_hopping_window_counts,
-        "q102_bfs_distances": q102_bfs_distances,
-        "q103_sorted_neighborhood": q103_sorted_neighborhood,
-        "q104_apply_changelog": q104_apply_changelog,
-        "q105_bm25_topk": q105_bm25_topk,
-        "q106_hard_negatives": q106_hard_negatives,
-        "q107_substring_dups": q107_substring_dups,
-        "q108_bpe_merges": q108_bpe_merges,
-        "q109_bpe_merges_batched": q109_bpe_merges_batched,
-        "q110_substring_cut_spans": q110_substring_cut_spans,
-        "q111_audio_metadata": q111_audio_metadata,
-        "q112_video_metadata": q112_video_metadata,
-        "q113_substring_dedup_apply": q113_substring_dedup_apply,
-    }
+    """Every module-level ``q<N>_…`` function, keyed by name, in order of N."""
+    found = (
+        (int(m.group(1)), name, fn)
+        for name, fn in globals().items()
+        if (m := _QUERY_NAME.match(name)) and callable(fn)
+    )
+    return {name: fn for _, name, fn in sorted(found)}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -6,9 +6,10 @@
         --media s3://.../media       (media_ref, content) \
         --out   s3://.../extracted \
         --ledger s3://.../ledger \
-        [--resume] [--n-buckets 4096] [--n-salt 16]
+        [--n-buckets 4096]
 
-Resumes idempotently from the bucket ledger when --resume is set.
+Every run resumes idempotently from the bucket ledger: buckets it already
+records are skipped.
 """
 
 from __future__ import annotations

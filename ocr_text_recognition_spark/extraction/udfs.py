@@ -1,11 +1,12 @@
 """Arrow-batched pandas UDFs — the engine's entire Python surface.
 
 Per the north rule (BASELINE.json:15) there is NO per-row Python at the
-Spark level: both UDFs are scalar-iterator pandas UDFs, so data crosses the
-JVM/Python boundary in Arrow record batches and the expensive engine state
-(the glyph atlas / template caches — stand-ins for the reference's EasyOCR
-weights loaded once per process, /root/reference/src/model/ocr_model.py:26-31)
-is initialized lazily once per executor and reused across batches.
+Spark level: the text UDF and the ref UDF are scalar-iterator pandas UDFs,
+so data crosses the JVM/Python boundary in Arrow record batches and the
+expensive engine state (the glyph atlas / template caches — stand-ins for
+the reference's EasyOCR weights loaded once per process, reference
+src/model/ocr_model.py:26-31) is initialized lazily once per executor and
+reused across batches.
 
 Boundary cost. Most of the in-Spark vs standalone gap per ref was a fixed
 per-task cost, not Arrow. PySpark's worker calls
@@ -65,26 +66,10 @@ def extract_main_text_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield s.map(lambda x: extract(x) if x is not None else "")
 
 
-@pandas_udf(StringType())
-def recognize_media_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Media payload bytes -> recognized text (full preprocessing +
-    segmentation + greedy decode per image, vectorized numpy inside)."""
-    _, recognize, _ = _engine()
-    for s in batches:
-        yield s.map(lambda b: recognize(b) if b is not None else "")
-
-
-@pandas_udf(StringType())
-def parse_pdf_layout_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """PDF-ish page payload -> main text (furniture strip, fine-print drop,
-    y-gap line grouping, reading order — extraction/pdflayout.py)."""
-    _, _, parse_pdf = _engine()
-    for s in batches:
-        yield s.map(parse_pdf)
-
-
 def make_extract_ref_udf(**preprocess_kwargs):
-    """Build the (kind, payload) -> text dispatch UDF with optional kernel
+    """Build the (kind, payload) -> text ref UDF: 'media' payloads go
+    through the OCR kernel, 'pdf' payloads through the layout parser, so
+    both kinds share one distinct-ref pass. Optional kernel
     preprocessing overrides (binarizer='adaptive', adaptive_block=...,
     rotate_portrait=True — see kernel.reference_kernel.preprocess_image).
     The kwargs are captured in the closure and shipped to executors via
@@ -109,10 +94,3 @@ def make_extract_ref_udf(**preprocess_kwargs):
 
     return _extract_ref_udf
 
-
-# Default instance (Otsu chain): (kind, payload) -> text, dispatching per
-# span kind inside the batch: 'media' through the OCR kernel, 'pdf'
-# through the layout parser. Lets media and pdf spans share ONE
-# distinct-ref pass + join instead of one subtree per kind (one fewer
-# documents scan, ~4 fewer stages).
-extract_ref_udf = make_extract_ref_udf()

@@ -106,17 +106,6 @@ def recognize_media_bytes(data: bytes | None, **preprocess_kwargs) -> str:
     return recognize.recognize_text(mask)
 
 
-def extract_table_bytes(data: bytes | None) -> list[list[str]] | None:
-    """Media payload -> table rows, or None when no ruled grid detected."""
-    if not data:
-        return None
-    try:
-        img = decode_image(bytes(data))
-    except Exception:
-        return None
-    return tableparse.extract_table(preprocess_image(img))
-
-
 @dataclass(frozen=True)
 class Span:
     kind: str

@@ -1,28 +1,11 @@
-"""Engine fallback chain, sharpen kernel, source interface."""
+"""Image helpers (rotate90, sharpen) and the table/JSONL source interface."""
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from ocr_text_recognition_spark.kernel import backends, imageops, render
-from ocr_text_recognition_spark.kernel.imgcodec import encode_image
-
-
-def test_engine_chain_terminates_with_builtin():
-    chain = backends.engine_chain()
-    assert chain[-1][0] == "builtin"  # hermetic fallback always present
-
-
-def test_recognize_with_fallback():
-    img = render.render_text_image(["FALLBACK 42"])
-    text, engine = backends.recognize_with_fallback(encode_image(img))
-    assert text == "FALLBACK 42"
-    assert engine in {"builtin", "tesseract", "easyocr"}
-    assert backends.recognize_with_fallback(None) == ("", "none")
-    # corrupt bytes: every engine raises or returns '' -> chain degrades
-    text, _ = backends.recognize_with_fallback(b"garbage")
-    assert text == ""
+from ocr_text_recognition_spark.kernel import imageops
 
 
 def test_rotate90_if_portrait():
@@ -58,171 +41,6 @@ def test_read_write_table_parquet_fallback(spark, tmp_path):
     assert sources.read_table(spark, path).count() == 2
 
 
-def _install_fake_tesseract(monkeypatch, calls):
-    """Inject fake pytesseract + PIL modules so the import-gated token-box
-    and per-cell paths execute positively in this container."""
-    import sys
-    import types
-
-    fake_pil = types.ModuleType("PIL")
-    fake_image_mod = types.ModuleType("PIL.Image")
-    fake_image_mod.open = lambda fp: ("image", fp.read())
-    fake_pil.Image = fake_image_mod
-
-    fake_tess = types.ModuleType("pytesseract")
-    fake_tess.Output = types.SimpleNamespace(DICT="dict")
-
-    def image_to_data(img, output_type=None, config=""):
-        calls.append(("data", config))
-        # mixed confidences + blank tokens: only conf>30 non-blank survive
-        return {
-            "text": ["Math", "", "  ", "8,5", "junk", "9.0"],
-            "conf": ["95", "-1", "50", "88.0", "12", "31"],
-            "left": [10, 0, 0, 210, 5, 310],
-            "top": [12, 0, 0, 11, 90, 13],
-            "width": [50, 0, 0, 30, 9, 30],
-            "height": [14, 0, 0, 13, 9, 13],
-        }
-
-    def image_to_string(img, config=""):
-        calls.append(("string", config))
-        return "  8,5 \n"
-
-    fake_tess.image_to_data = image_to_data
-    fake_tess.image_to_string = image_to_string
-    monkeypatch.setitem(sys.modules, "PIL", fake_pil)
-    monkeypatch.setitem(sys.modules, "PIL.Image", fake_image_mod)
-    monkeypatch.setitem(sys.modules, "pytesseract", fake_tess)
-
-
-def test_tesseract_token_boxes_contract(monkeypatch):
-    """image_to_data --psm 6 path (reference table_ocr_service.py:207-211,
-    conf>30 filter at :245): returns (text,left,top,width,height,conf)
-    dicts ready for tokens_to_grid."""
-    calls = []
-    _install_fake_tesseract(monkeypatch, calls)
-    toks = backends.tokens_from_bytes(b"some image bytes")
-    assert [t["text"] for t in toks] == ["Math", "8,5", "9.0"]
-    assert toks[0] == {"text": "Math", "left": 10, "top": 12, "width": 50, "height": 14, "conf": 95.0}
-    # conf == 31 passes (> 30), conf == 12 and blanks filtered
-    assert {t["conf"] for t in toks} == {95.0, 88.0, 31.0}
-    assert calls and calls[0] == ("data", "--psm 6")
-
-
-def test_tesseract_cell_psm8_whitelist_contract(monkeypatch):
-    """Per-cell --psm 8 + Vietnamese char whitelist
-    (reference enhanced_table_ocr_service.py:249-252)."""
-    calls = []
-    _install_fake_tesseract(monkeypatch, calls)
-    text = backends.recognize_cell_bytes(b"cell image")
-    assert text == "8,5"  # stripped
-    kind, config = calls[-1]
-    assert kind == "string"
-    assert config.startswith("--psm 8 -c tessedit_char_whitelist=")
-    for needle in ("0123456789", "abcdefghijklmnopqrstuvwxyz", "đ", "ữ", " .,()-"):
-        assert needle in config
-
-
-def test_token_paths_none_without_engine():
-    """Without pytesseract installed the token-box / cell paths return None
-    (callers fall back to the builtin kernel) and empty input returns
-    empty/'' rather than None."""
-    import importlib.util
-
-    if importlib.util.find_spec("pytesseract") is not None:
-        return  # environment actually has tesseract; nothing to assert
-    assert backends.tokens_from_bytes(b"img") is None
-    assert backends.recognize_cell_bytes(b"img") is None
-    assert backends.tokens_from_bytes(None) == []
-    assert backends.recognize_cell_bytes(b"") == ""
-
-
-import pytest
-
-
-@pytest.fixture(autouse=True)
-def _fresh_backend_probes():
-    """Probe results are memoized per process; fake-module injection tests
-    need a clean slate before AND after (so a cached fake never leaks into
-    other test modules)."""
-    backends._reset_probe_cache()
-    yield
-    backends._reset_probe_cache()
-
-
-def _install_fake_easyocr(monkeypatch, calls):
-    """Inject a fake easyocr module returning reference-shaped readtext
-    results: (4-point bbox, text, confidence) tuples."""
-    import sys
-    import types
-
-    fake = types.ModuleType("easyocr")
-
-    class Reader:
-        def __init__(self, langs, gpu=False):
-            calls.append(("init", tuple(langs)))
-
-        def readtext(self, data):
-            calls.append(("readtext", bytes(data)))
-            return [
-                # skewed quad: left/top from min, width/height from max-min
-                ([[10.2, 12.9], [62.0, 11.0], [61.0, 27.0], [11.0, 26.0]], " Math ", 0.95),
-                ([[200, 10], [230, 10], [230, 24], [200, 24]], "8,5", 0.88),
-                ([[5, 90], [14, 90], [14, 99], [5, 99]], "junk", 0.4),   # conf <= 0.5
-                ([[300, 9], [330, 9], [330, 25], [300, 25]], "   ", 0.99),  # blank
-            ]
-
-    fake.Reader = Reader
-    monkeypatch.setitem(sys.modules, "easyocr", fake)
-
-
-def test_easyocr_token_boxes_contract(monkeypatch):
-    """EasyOCR token-box fallback (reference table_ocr_service.py:354-390):
-    4-point bbox -> (left, top, width, height) via min/max reduction,
-    conf>0.5 + non-blank filter, same dict shape as the Tesseract twin.
-    No pytesseract in this container, so the chain falls through to the
-    injected fake easyocr."""
-    calls = []
-    _install_fake_easyocr(monkeypatch, calls)
-    toks = backends.tokens_from_bytes(b"img")
-    assert [t["text"] for t in toks] == ["Math", "8,5"]
-    # exact reference reduction: int(min(x)), int(min(y)), int(max-min)
-    assert toks[0] == {
-        "text": "Math", "left": 10, "top": 11, "width": 51, "height": 16, "conf": 0.95,
-    }
-    assert toks[1] == {
-        "text": "8,5", "left": 200, "top": 10, "width": 30, "height": 14, "conf": 0.88,
-    }
-    assert calls[0] == ("init", ("en", "vi"))
-    # reader is a per-process singleton: second call reuses it
-    backends.tokens_from_bytes(b"img2")
-    assert sum(1 for c in calls if c[0] == "init") == 1
-    # grid integration point: the reference's larger EasyOCR row gap
-    assert backends.EASYOCR_ROW_GAP == 30
-
-
-def test_token_probe_memoized_once_per_process(monkeypatch):
-    """tokens_from_bytes / recognize_cell_bytes must not rebuild their
-    factory per call: the import probe runs exactly once per process."""
-    probes = {"tokens": 0, "cell": 0}
-    real_tokens, real_cell = backends._try_tesseract_tokens, backends._try_tesseract_cell
-
-    def counting_tokens():
-        probes["tokens"] += 1
-        return real_tokens()
-
-    def counting_cell():
-        probes["cell"] += 1
-        return real_cell()
-
-    monkeypatch.setattr(backends, "_try_tesseract_tokens", counting_tokens)
-    monkeypatch.setattr(backends, "_try_tesseract_cell", counting_cell)
-    for _ in range(3):
-        backends.tokens_from_bytes(b"x")
-        backends.recognize_cell_bytes(b"x")
-    assert probes == {"tokens": 1, "cell": 1}
-
-
 def test_read_documents_jsonl_gz_with_poison_lines(spark, tmp_path):
     """JSONL ingestion: explicit schema (no inference pass), gzip handled
     by the codec layer, and a malformed line surfaces as a quarantined
@@ -256,61 +74,3 @@ def test_read_documents_jsonl_gz_with_poison_lines(spark, tmp_path):
     f2 = read_documents_jsonl(spark, str(flat), interleaved=False)
     assert {(r["doc_id"], r["text"]) for r in
             f2.filter(F.col("_corrupt_record").isNull()).collect()} == {(1, "abc"), (2, "def")}
-
-
-def test_rotation_deskew_default_for_external_engines(monkeypatch):
-    """Real-image deployments default to the ROTATION deskew model on the
-    external-engine path (the reference preprocesses with minAreaRect +
-    warpAffine BEFORE invoking the OCR engine, table_ocr_service.py:73-110):
-    a genuinely rotated render reaching the fallback chain must arrive at
-    the engine straightened. The fake tesseract runs the builtin kernel on
-    exactly the bytes it receives, so the assertion is end-to-end through
-    recognize_with_fallback: chain(rotated) == kernel(straight). The
-    builtin terminal fallback keeps the original (shear-model,
-    fixture-exact) bytes — pinned by the no-engine branch."""
-    import sys
-    import types
-
-    from ocr_text_recognition_spark.kernel import imageops, reference_kernel, render
-    from ocr_text_recognition_spark.kernel.imgcodec import decode_image, encode_image
-
-    lines = ["HELLO SPARK ENGINE", "SECOND LINE OF TEXT", "THIRD LINE HERE"]
-    straight = render.render_text_image(lines)
-    expected = reference_kernel.recognize_media_bytes(encode_image(straight))
-    assert expected == "\n".join(lines)  # sanity: clean render decodes
-
-    rotated = imageops.rotate_mask(straight, 2500, fill=render.BG)  # 2.5 deg
-    rotated_bytes = encode_image(rotated)
-
-    received: list[bytes] = []
-    fake_pil = types.ModuleType("PIL")
-    fake_image_mod = types.ModuleType("PIL.Image")
-    fake_image_mod.open = lambda fp: fp.read()
-    fake_pil.Image = fake_image_mod
-    fake_tess = types.ModuleType("pytesseract")
-    fake_tess.get_languages = lambda config="": []
-
-    def image_to_string(img_bytes, config="", **kw):
-        received.append(img_bytes)
-        return reference_kernel.recognize_media_bytes(img_bytes)
-
-    fake_tess.image_to_string = image_to_string
-    monkeypatch.setitem(sys.modules, "PIL", fake_pil)
-    monkeypatch.setitem(sys.modules, "PIL.Image", fake_image_mod)
-    monkeypatch.setitem(sys.modules, "pytesseract", fake_tess)
-
-    out, engine = backends.recognize_with_fallback(rotated_bytes)
-    assert engine == "tesseract"
-    assert out == expected
-    # the engine saw a STRAIGHTENED page: residual rotation under dead-band
-    from ocr_text_recognition_spark.kernel.imageops import (
-        ROTATION_DEAD_BAND_MILLIDEG,
-        estimate_rotation_millideg,
-        gaussian_blur,
-        otsu_binarize,
-    )
-
-    seen_mask = otsu_binarize(gaussian_blur(decode_image(received[0])))
-    assert abs(estimate_rotation_millideg(seen_mask)) <= ROTATION_DEAD_BAND_MILLIDEG
-    # non-IMG1 payloads pass through to the engine untouched
-    assert backends.derotate_bytes_for_external(b"not an image") == b"not an image"

@@ -20,10 +20,13 @@ def test_read_media_dir_filters_extensions(spark, tmp_path):
     assert set(rows) == {"a", "b"}
     assert rows["a"] == payload
 
-    # scanned payloads flow straight into the kernel UDF
-    from ocr_text_recognition_spark.extraction.udfs import recognize_media_udf
+    # scanned payloads flow straight into the job's ref UDF as kind='media'
+    from pyspark.sql import functions as F
 
-    out = media.select(recognize_media_udf("content").alias("t")).collect()
+    from ocr_text_recognition_spark.extraction.udfs import make_extract_ref_udf
+
+    ref_udf = make_extract_ref_udf()
+    out = media.select(ref_udf(F.lit("media"), "content").alias("t")).collect()
     assert {r["t"] for r in out} == {"SCAN ME"}
 
 
